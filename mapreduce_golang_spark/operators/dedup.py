@@ -92,7 +92,7 @@ def _jaccard_for_pairs(
     (doc_id, sh_set) pass it in instead of re-aggregating the shingle
     stream — array_intersect/size are order-insensitive, so any
     collect_list ordering is equivalent (minhash_ml_crosscheck shares
-    one materialized set table between this verify and HashingTF).
+    one lazy set table between this verify and HashingTF).
     """
     if sets_ is None:
         sets_ = shingles.groupBy("doc_id").agg(F.collect_list("shingle").alias("sh_set"))
@@ -512,7 +512,8 @@ def minhash_ml_crosscheck(
     # the per-doc shingle-set table is needed TWICE — exact-Jaccard
     # verify of our band candidates and HashingTF's input — and both
     # consumers are set-semantic (array_intersect size; binary TF), so
-    # one checkpointed collect_list serves both instead of each leg
+    # both legs read this one lazy table, whose groupBy exchange appears
+    # once in the plan as a ReusedExchange, instead of each leg
     # re-aggregating the shingle stream (one groupBy exchange + one
     # collect_list pass saved; outputs unchanged for any element order)
     sets_ = shingles.groupBy("doc_id").agg(F.collect_list("shingle").alias("sh"))
@@ -629,37 +630,105 @@ def right_size_graph_counted(
     return d, n
 
 
+def _min_root_components(a, b):
+    """Union-find over the edge list ``a[i] - b[i]`` whose root is always
+    the minimum node of its set. Returns ``(nodes, roots)``: every
+    distinct endpoint, ascending, and the minimum id of its component.
+
+    Vectorized over numpy arrays (no per-edge Python objects, so driver
+    memory stays O(edges)). Nodes are renumbered by rank, so a smaller
+    index is a smaller id. Each round hooks every root under the
+    smallest root seen across its edges (a merge keeps the smaller
+    root, so parent[x] <= x always holds and a root is the minimum of
+    its set), then pointer-jumps until every node points at its root.
+    A root that survives a round without absorbing another gets hooked
+    the next round, so the unfinished roots at least halve every two
+    rounds: O(log nodes) rounds of O(edges) work.
+    """
+    import numpy as np
+
+    nodes, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ia, ib = idx[: len(a)], idx[len(a):]
+    parent = np.arange(len(nodes))
+    while True:
+        ra, rb = parent[ia], parent[ib]
+        if np.array_equal(ra, rb):
+            return nodes, nodes[parent]
+        lo = np.minimum(ra, rb)
+        np.minimum.at(parent, ra, lo)
+        np.minimum.at(parent, rb, lo)
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+
+
+def _with_singletons(df: DataFrame, labels: DataFrame, id_col: str, hint: bool) -> DataFrame:
+    """(id_col, component_id) for every doc of ``df``: docs absent from
+    the (u, label) table are singletons and map to themselves."""
+    return (
+        df.select(F.col(id_col).alias("u"))
+        .join(F.broadcast(labels) if hint else labels, "u", "left")
+        .select(
+            F.col("u").alias(id_col),
+            F.coalesce("label", F.col("u")).alias("component_id"),
+        )
+    )
+
+
 def near_dup_components(
     df: DataFrame, pairs: DataFrame | None = None, id_col: str = "doc_id", max_iter: int = 15
 ) -> DataFrame:
-    """Connected components over the near-dup pair graph via iterative
-    min-label propagation — the transitive dedup grouping (a cluster =
-    one original + all its fuzzed copies). Returns (doc_id,
-    component_id) for every doc; singletons map to themselves.
+    """Connected components over the near-dup pair graph — the
+    transitive dedup grouping (a cluster = one original + all its
+    fuzzed copies). Returns (doc_id, component_id) for every doc;
+    component_id is the minimum doc id of the component, and
+    singletons map to themselves.
 
-    Iterative DataFrame algorithm (not SQL-expressible in one query):
-    each hop joins labels to edges, takes the min over the
-    neighborhood, then POINTER-JUMPS (label <- label of label) so long
-    chains collapse in O(log diameter) hops, bounded by ``max_iter``.
-    Loop discipline (round-11 verdict #4 — the iterative family's cost
-    is scheduler round-trips, not data): below the measured broadcast
-    gate each hop's joins are broadcast-hash, so a hop costs one
-    shuffle; one hop per checkpointed job (a fused 2-hop job measured
-    SLOWER — see the loop comment); and the convergence check is a
-    flag-count on the just-checkpointed result (the previous label
-    rides along the round as ``old``, so no extra join against the
-    prior labels table — labels are monotone non-increasing, making
-    ``label != old`` exactly "changed").
-    Edges/labels are hash-partitioned at a width derived from their
-    measured size (``right_size_graph``) before iterating. If the loop
-    exits without converging (needs > max_iter hops) a RuntimeError is
-    raised rather than silently returning non-fixpoint labels — the
-    DuckDB oracle computes the full transitive closure, and the
-    documented semantics are the fixpoint.
+    Two paths, chosen by one bounded read of the pair graph
+    (``limit(GRAPH_BROADCAST_MAX_ROWS + 1)``, fetched as Arrow). On the
+    first path, with ``pairs`` already materialized, that read is the
+    only Spark job run while the DataFrame is built:
+
+    - **At most GRAPH_BROADCAST_MAX_ROWS pairs** (every fixture
+      scale): the transitive closure is computed in-process by a
+      min-root union-find over the numpy endpoint arrays
+      (``_min_root_components``; O(pairs x 16 B) on the driver), and
+      the (u, label) table is broadcast-joined back to the corpus.
+      The label-propagation loop below measured 17 jobs for the same
+      answer on the sf0.01 pair graph.
+    - **Above the cap:** iterative min-label propagation, the scale
+      path. Each hop joins labels to edges, takes the min over the
+      neighborhood, then POINTER-JUMPS (label <- label of label) so
+      long chains collapse in O(log diameter) hops, bounded by
+      ``max_iter``. Loop discipline (round-11 verdict #4 — the
+      iterative family's cost is scheduler round-trips, not data):
+      below the measured broadcast gate on label rows each hop's joins
+      are broadcast-hash, so a hop costs one shuffle; one hop per
+      checkpointed job (a fused 2-hop job measured SLOWER — see the
+      loop comment); and the convergence check is a flag-count on the
+      just-checkpointed result (the previous label rides along the
+      round as ``old``, so no extra join against the prior labels
+      table — labels are monotone non-increasing, making ``label !=
+      old`` exactly "changed"). Edges/labels are hash-partitioned at a
+      width derived from their measured size (``right_size_graph``)
+      before iterating. If the loop exits without converging (needs >
+      max_iter hops) a RuntimeError is raised rather than silently
+      returning non-fixpoint labels — the DuckDB oracle computes the
+      full transitive closure, and the documented semantics are the
+      fixpoint. The in-process path always reaches the fixpoint, so
+      ``max_iter`` and the RuntimeError apply to the loop path only.
+
+    Both paths give the same labels: the min-root union-find root and
+    the min-label fixpoint are each the minimum id of the component.
+    Callers whose pair graph is lazy and may exceed the cap should
+    materialize it first: the bounded read and the loop each evaluate
+    ``pairs``.
 
     Contract (round-13 advice): an externally supplied ``pairs`` must
     draw BOTH endpoints from ``df``'s doc ids. Since round 13 the
-    label frontier is initialized from the edge endpoints (so the loop
+    label frontier of both paths is the set of edge endpoints (so the loop
     shuffles only the pair graph, not the corpus); an out-of-corpus
     endpoint would therefore participate in min-label propagation —
     it can bridge components and even become the winning min label, so
@@ -671,6 +740,16 @@ def near_dup_components(
     """
     if pairs is None:
         pairs = ngram_jaccard_pairs(df)
+    graph = pairs.select("doc_a", "doc_b").limit(GRAPH_BROADCAST_MAX_ROWS + 1).toArrow()
+    if graph.num_rows <= GRAPH_BROADCAST_MAX_ROWS:
+        import pyarrow as pa
+
+        graph = graph.drop_null()
+        nodes, roots = _min_root_components(
+            graph.column("doc_a").to_numpy(), graph.column("doc_b").to_numpy()
+        )
+        labels = df.sparkSession.createDataFrame(pa.table({"u": nodes, "label": roots}))
+        return _with_singletons(df, labels, id_col, len(nodes) <= GRAPH_BROADCAST_MAX_ROWS)
     edges = right_size_graph(
         pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).union(
             pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
@@ -771,14 +850,7 @@ def near_dup_components(
     # themselves — the same labels they'd have earned riding the loop.
     # The converged labels table is ≤ dup-graph-node rows, so below the
     # gate this is one broadcast join over the corpus scan.
-    return (
-        df.select(F.col(id_col).alias("u"))
-        .join(bc(labels), "u", "left")
-        .select(
-            F.col("u").alias(id_col),
-            F.coalesce("label", F.col("u")).alias("component_id"),
-        )
-    )
+    return _with_singletons(df, labels, id_col, small)
 
 
 def near_dup_pipeline(

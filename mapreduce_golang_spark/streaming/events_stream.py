@@ -27,6 +27,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from mapreduce_golang_spark.sources.tables import parquet_schema
+
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
 
@@ -49,12 +51,13 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Streaming sources need the schema up front, but the fixture's
     physical ts layout has varied between driver rounds (INT64 nanos,
     naive timestamp[us]/NTZ — see sources/tables.py). Sniff the layout
-    with a zero-cost batch schema read, declare the matching streaming
-    schema, and normalize to session-TZ TIMESTAMP so every downstream
-    event-time operator sees one type.
+    from the batch-inferred schema (``tables.parquet_schema``: one
+    inference job per file version, none on later calls), declare the
+    matching streaming schema, and normalize to session-TZ TIMESTAMP so
+    every downstream event-time operator sees one type.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    physical = dict(spark.read.parquet(f"{sf_dir}/events.parquet").dtypes)["ts"]
+    physical = parquet_schema(spark, f"{sf_dir}/events.parquet")["ts"].dataType.simpleString()
     from pyspark.sql.types import TimestampNTZType, TimestampType
 
     ts_type = {

@@ -14,10 +14,12 @@ Candidates:
              coalescePartitions.parallelismFirst=false (AQE coalesces
              tiny shuffles to FEWER reduce tasks instead of
              parallelism-first 1MB floors)
-  initial  — adaptive.coalescePartitions.initialPartitionNum high +
-             shuffle.partitions low (scale-adaptive initial width)
+  shj      — sql.join.preferSortMergeJoin=false (shuffled-hash joins
+             instead of sort-merge where the planner may choose)
+  maxpart  — sql.files.maxPartitionBytes=512m (fewer, larger scan
+             splits)
 
-Usage: python scripts/ab_conf_fixedcost.py <config-name>
+Usage: python scripts/ab_conf_fixedcost.py {base,advisory,shj,maxpart}
 Run each config in its OWN process, alternating, several reps.
 """
 from __future__ import annotations
@@ -70,6 +72,8 @@ CONFIGS = {
 
 
 def main() -> None:
+    if len(sys.argv) != 2 or sys.argv[1] not in CONFIGS:
+        sys.exit(f"usage: {sys.argv[0]} {{{','.join(CONFIGS)}}}")
     name = sys.argv[1]
     extra = CONFIGS[name]
     from pyspark.sql import SparkSession

@@ -1,7 +1,11 @@
 from __future__ import annotations
 
+import os
+
 import __spark_entry__ as entrymod
 import pytest
+from mapreduce_golang_spark.operators import dedup as dedup_mod
+from tests.jobcount import run_counting_jobs
 from tests.oracle import assert_matches_oracle
 
 
@@ -56,12 +60,14 @@ def test_pipeline_consistent_with_parts(spark, sf_dir):
     assert all(r.component_size == sizes[r.component_id] for r in pipe)
 
 
-def test_components_pointer_jumping_collapses_long_chain(spark):
+def test_components_pointer_jumping_collapses_long_chain(spark, monkeypatch):
     # a 64-node path graph has diameter 63 — naive min-label needs 63
     # rounds; pointer jumping must finish within max_iter=10 (O(log d))
     from mapreduce_golang_spark.operators.dedup import near_dup_components
 
     n = 64
+    # cap 0: 63 pairs would otherwise take the in-process path and skip the loop
+    monkeypatch.setattr(dedup_mod, "GRAPH_BROADCAST_MAX_ROWS", 0)
     docs = spark.createDataFrame([(i, f"doc {i}") for i in range(n)], ["doc_id", "text"])
     pairs = spark.createDataFrame(
         [(i, i + 1, 1.0) for i in range(n - 1)], ["doc_a", "doc_b", "jaccard"]
@@ -69,3 +75,42 @@ def test_components_pointer_jumping_collapses_long_chain(spark):
     comp = near_dup_components(docs, pairs=pairs, max_iter=10).collect()
     assert {r.component_id for r in comp} == {0}
     assert len(comp) == n
+
+
+def test_components_build_job_budget(spark, sf_dir):
+    # job budget: over a materialized pair graph, building the components
+    # DataFrame runs one job (the bounded pair-graph read), not the
+    # label-propagation loop's 17
+    from mapreduce_golang_spark.sources.tables import load_table
+
+    docs = load_table(spark, os.path.join(os.path.dirname(sf_dir), "sf0.01"), "documents")
+    pairs = dedup_mod.ngram_jaccard_pairs(docs).localCheckpoint(eager=True)
+    comp, jobs = run_counting_jobs(spark, lambda: dedup_mod.near_dup_components(docs, pairs=pairs))
+    assert jobs <= 1
+    assert pairs.count() > 0
+    assert comp.count() == docs.count()
+
+
+@pytest.mark.parametrize("seed", range(8))
+def test_min_root_components_matches_reference(seed):
+    # random sparse graphs (chains, stars and scattered ids included) vs
+    # a plain dict union-find: every endpoint's root is its component's min
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    ids = rng.choice(10_000, size=300, replace=False).astype("int64")
+    n_edges = int(rng.integers(1, 600))
+    a, b = rng.choice(ids, n_edges), rng.choice(ids, n_edges)
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for x, y in zip(a.tolist(), b.tolist()):
+        rx, ry = find(x), find(y)
+        parent[max(rx, ry)] = min(rx, ry)
+    nodes, roots = dedup_mod._min_root_components(a, b)
+    assert nodes.tolist() == sorted(set(a.tolist()) | set(b.tolist()))
+    assert roots.tolist() == [find(x) for x in nodes.tolist()]

@@ -73,21 +73,47 @@ def test_weighted_pagerank_big_path_equals_small_path(spark, tiny_graph, monkeyp
     assert small == big and len(small) == 6
 
 
-def test_components_big_path_equals_small_path(spark, tiny_graph, monkeypatch):
-    docs, pairs = tiny_graph
-    small = {
-        r.doc_id: r.component_id
-        for r in dedup_mod.near_dup_components(docs, pairs=pairs).collect()
-    }
-    _force_big_path(monkeypatch)
-    big = {
-        r.doc_id: r.component_id
-        for r in dedup_mod.near_dup_components(docs, pairs=pairs).collect()
-    }
-    assert small == big
-    # exact fixpoint either way: min-label per component, singleton maps
-    # to itself
-    assert small == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20}
+def test_components_big_path_equals_small_path(spark, monkeypatch):
+    """near_dup_components has three regimes, picked by the pair and
+    label counts it measures against GRAPH_BROADCAST_MAX_ROWS: the
+    in-process union-find (pairs <= cap), the label-propagation loop
+    with broadcast hints (pairs > cap >= label rows) and the loop
+    without hints (cap 0). All three must return the same fixpoint."""
+    # a 4-clique {1,2,3,4} (6 pairs, listed in both orientations) plus
+    # the pair {10,11}: 7 pairs over 6 nodes; doc 20 is a singleton
+    pairs = spark.createDataFrame(
+        [(4, 3, 0.9), (1, 2, 0.9), (3, 1, 0.8), (2, 3, 0.7), (1, 4, 0.6), (4, 2, 0.6), (11, 10, 0.55)],
+        ["doc_a", "doc_b", "jaccard"],
+    )
+    docs = spark.createDataFrame(
+        [(i, "x") for i in (1, 2, 3, 4, 10, 11, 20)], ["doc_id", "text"]
+    )
+    loops = []
+    measured = dedup_mod.right_size_graph_counted
+
+    def counted(*args, **kwargs):
+        loops.append(1)
+        return measured(*args, **kwargs)
+
+    monkeypatch.setattr(dedup_mod, "right_size_graph_counted", counted)
+    results = {}
+    for regime, cap, loop, hinted in (
+        ("in_process", None, False, True),
+        ("loop_broadcast", 6, True, True),
+        ("loop_shuffle", 0, True, False),
+    ):
+        if cap is not None:
+            monkeypatch.setattr(dedup_mod, "GRAPH_BROADCAST_MAX_ROWS", cap)
+        loops.clear()
+        comp = dedup_mod.near_dup_components(docs, pairs=pairs)
+        analyzed = comp._jdf.queryExecution().analyzed().toString()
+        assert bool(loops) == loop, regime
+        assert ("strategy=broadcast" in analyzed) == hinted, regime
+        results[regime] = {r.doc_id: r.component_id for r in comp.collect()}
+    # exact fixpoint in every regime: min-label per component, singleton
+    # maps to itself
+    expected = {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20}
+    assert results == {regime: expected for regime in results}
 
 
 def test_kcore_big_path_equals_small_path(spark, tiny_graph, monkeypatch):
