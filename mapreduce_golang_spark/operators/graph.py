@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_golang_spark.operators.dedup import (
     GRAPH_BROADCAST_MAX_ROWS,
+    checkpoint_observed,
     ngram_jaccard_pairs,
     right_size_graph,
     right_size_graph_counted,
@@ -62,16 +63,10 @@ def near_dup_pagerank(
     # the node-table checkpoint as an observed metric and round 1
     # reads the materialized distinct instead of re-deriving it
     # (round 15: one setup job, not distinct-count + re-distinct)
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    nodes = (
-        edges.select(F.col("u").alias("node"))
-        .distinct()
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+    nodes, row = checkpoint_observed(
+        edges.select(F.col("u").alias("node")).distinct(), F.count(F.lit(1)).alias("n")
     )
-    n_nodes = int(obs.get["n"])
+    n_nodes = int(row["n"])
     if n_nodes == 0:
         return df.sparkSession.createDataFrame([], "doc_id long, rank double")
     # measured-gate broadcast (dedup.GRAPH_BROADCAST_MAX_ROWS): the
@@ -359,18 +354,11 @@ def kcore_docs(
     # components hop fusion; see near_dup_components). The fixpoint
     # edge count rides the checkpoint job as an observed metric
     # (round 15): one scheduler round-trip per prune, not two.
-    from pyspark.sql import Observation
-
     for _ in range(max_rounds):
         if n_edges == 0:
             break
-        obs = Observation()
-        pruned = (
-            prune(edges)
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        n_pruned = int(obs.get["n"])
+        pruned, row = checkpoint_observed(prune(edges), F.count(F.lit(1)).alias("n"))
+        n_pruned = int(row["n"])
         if n_pruned == n_edges:
             break
         edges, n_edges = pruned, n_pruned
@@ -421,16 +409,10 @@ def near_dup_weighted_pagerank(
         sym.withColumn("wsum", F.sum("jaccard").over(Window.partitionBy("u"))), "u"
     )
     # same observed-metric setup as near_dup_pagerank (round 15)
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    nodes = (
-        edges.select(F.col("u").alias("node"))
-        .distinct()
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+    nodes, row = checkpoint_observed(
+        edges.select(F.col("u").alias("node")).distinct(), F.count(F.lit(1)).alias("n")
     )
-    n_nodes = int(obs.get["n"])
+    n_nodes = int(row["n"])
     if n_nodes == 0:
         return df.sparkSession.createDataFrame([], "doc_id long, rank double")
     small = n_nodes <= GRAPH_BROADCAST_MAX_ROWS

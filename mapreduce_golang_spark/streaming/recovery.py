@@ -90,7 +90,7 @@ def build_chunked_input(spark: SparkSession, sf_dir: str, work_dir: str) -> str:
             os.utime(dst, (base + j, base + j))
         shutil.rmtree(stage_dir, ignore_errors=True)
 
-    with ThreadPoolExecutor(max_workers=N_UNIQUE_CHUNKS) as pool:
+    with ThreadPoolExecutor(max_workers=min(4, N_UNIQUE_CHUNKS)) as pool:
         list(pool.map(_one, range(N_UNIQUE_CHUNKS)))
     return input_dir
 

@@ -146,3 +146,158 @@ def test_minhash_crosscheck_scaled_floors_to_pinned_at_fixture_scale(spark, sf_d
     scaled = minhash_ml_crosscheck(docs, num_features=None).collect()
     assert [tuple(r) for r in pinned] == [tuple(r) for r in scaled]
     assert len(pinned) == 1 and pinned[0]["n_ours"] >= 0
+
+
+# --- guarded pair stats: driver path vs Spark plan --------------------------
+
+
+def _guarded_queries(df, max_doc_freq):
+    from mapreduce_golang_spark.operators import dedup as D
+
+    return {
+        "jaccard": lambda: D.ngram_jaccard_pairs(df, max_doc_freq=max_doc_freq),
+        "containment": lambda: D.overlap_containment_pairs(df, max_doc_freq=max_doc_freq),
+        "stats": lambda: D._guarded_pair_stats(D.word_shingles(df), max_doc_freq),
+    }
+
+
+def _rows_with_spark_calls(monkeypatch, build, cap=None):
+    """(sorted rows of build(), number of times it ran the Spark plan of
+    the pair stats), under GRAPH_BROADCAST_MAX_ROWS = cap if given."""
+    from mapreduce_golang_spark.operators import dedup as D
+
+    calls = []
+    spark_plan = D._guarded_pair_stats_spark
+    with monkeypatch.context() as m:
+        m.setattr(D, "_guarded_pair_stats_spark", lambda *a, **kw: calls.append(1) or spark_plan(*a, **kw))
+        if cap is not None:
+            m.setattr(D, "GRAPH_BROADCAST_MAX_ROWS", cap)
+        rows = sorted(tuple(r) for r in build().collect())
+    return rows, len(calls)
+
+
+def _assert_paths_agree(monkeypatch, df, max_doc_freq):
+    """Every guarded query gives the same rows on the driver path and
+    on the Spark plan. The Spark plan is forced with a cap of -1, not 0:
+    an empty shingle stream has 0 rows and would fit a cap of 0."""
+    out = {}
+    for name, build in _guarded_queries(df, max_doc_freq).items():
+        driver, driver_calls = _rows_with_spark_calls(monkeypatch, build)
+        forced, forced_calls = _rows_with_spark_calls(monkeypatch, build, cap=-1)
+        assert (driver_calls, forced_calls) == (0, 1), name
+        assert driver == forced, name
+        out[name] = driver
+    return out
+
+
+def _word(i):
+    # the tokenizer keeps letters only, so numbered words spell digits as letters
+    return "".join(chr(ord("a") + int(c)) for c in str(i)) + "x"
+
+
+def _random_corpus(spark, seed, id_type="long", null_id=False):
+    # fuzzed copies of a few base texts, most behind a shared boilerplate
+    # prefix, so shingle doc freqs span 1 .. most of the corpus
+    import random
+
+    rng = random.Random(seed)
+    vocab = [_word(i) for i in range(40)]
+    boiler = "terms of use apply to all content here".split()
+    bases = [[rng.choice(vocab) for _ in range(rng.randint(6, 14))] for _ in range(8)]
+    rows = []
+    for i in range(48):
+        words = list(rng.choice(bases))
+        for _ in range(rng.randint(0, 3)):
+            words[rng.randrange(len(words))] = rng.choice(vocab)
+        if rng.random() < 0.6:
+            words = boiler[: rng.randint(3, len(boiler))] + words
+        rows.append((i * 3 + rng.randint(0, 2), " ".join(words)))
+    if null_id:
+        rows.append((None, " ".join(bases[0])))
+    return spark.createDataFrame(rows, f"doc_id {id_type}, text string")
+
+
+@pytest.mark.parametrize(
+    "max_doc_freq,id_type,null_id",
+    [(1, "long", False), (2, "int", False), (3, "long", True), (256, "long", False)],
+)
+def test_guarded_pair_paths_agree_on_random_corpora(spark, monkeypatch, max_doc_freq, id_type, null_id):
+    df = _random_corpus(spark, seed=max_doc_freq, id_type=id_type, null_id=null_id)
+    out = _assert_paths_agree(monkeypatch, df, max_doc_freq)
+    if max_doc_freq == 256:
+        assert out["jaccard"] and out["containment"]
+    if max_doc_freq > 1:
+        assert out["stats"]
+
+
+def test_guarded_pair_paths_agree_on_fixture(spark, sf_dir, monkeypatch):
+    import os
+
+    from mapreduce_golang_spark.operators.dedup import DEFAULT_MAX_DOC_FREQ
+    from mapreduce_golang_spark.sources.tables import load_table
+
+    docs = load_table(spark, os.path.join(os.path.dirname(sf_dir), "sf0.01"), "documents")
+    out = _assert_paths_agree(monkeypatch, docs, DEFAULT_MAX_DOC_FREQ)
+    assert out["jaccard"] and out["containment"]
+
+
+@pytest.mark.parametrize("rows", [[], [(1, "a b"), (2, "a b"), (3, "c"), (4, "")]])
+def test_guarded_pair_paths_agree_without_shingles(spark, monkeypatch, rows):
+    # an empty frame, and a corpus where every doc is shorter than k = 3
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    out = _assert_paths_agree(monkeypatch, df, 256)
+    assert out == {"jaccard": [], "containment": [], "stats": []}
+
+
+def _stream_sizes(df, max_doc_freq):
+    """(shingle rows, cold candidates, hot expansion) of df's shingle
+    stream, counted in plain Python: the three sizes the driver path of
+    the pair stats checks against its cap."""
+    from collections import defaultdict
+    from itertools import combinations
+
+    from mapreduce_golang_spark.operators.dedup import word_shingles
+
+    stream = [(r.doc_id, r.shingle) for r in word_shingles(df).collect()]
+    docs_of = defaultdict(set)
+    for d, s in stream:
+        docs_of[s].add(d)
+    hot = defaultdict(set)
+    for d, s in stream:
+        if len(docs_of[s]) > max_doc_freq:
+            hot[d].add(s)
+    cold = [sorted(ds) for ds in docs_of.values() if len(ds) <= max_doc_freq]
+    pairs = {p for ds in cold for p in combinations(ds, 2)}
+    n_candidates = sum(len(ds) * (len(ds) - 1) // 2 for ds in cold)
+    return len(stream), n_candidates, sum(min(len(hot[a]), len(hot[b])) for a, b in pairs)
+
+
+def _overflow_corpus(case):
+    """(rows, max_doc_freq) whose shingle rows fit a cap equal to their
+    count while ``case`` (cold candidates or hot-side expansion) does not."""
+    if case == "candidates":
+        # every doc shares the same eleven cold shingles (11 per pair)
+        shared = "one two three four five six seven eight nine ten eleven twelve"
+        return [(i, f"{shared} tail {_word(i)} end") for i in range(12)], 256
+    # 15 docs share a 32-word boilerplate (30 hot shingles at cap 10);
+    # ten of them also share a cold phrase, so each of their 45 pairs
+    # expands over 30 hot shingles
+    boiler = " ".join(_word(i) for i in range(32))
+    rows = [(i, f"{boiler} alpha beta gamma u {_word(i)}") for i in range(10)]
+    return rows + [(i, f"{boiler} p {_word(i)} q") for i in range(10, 15)], 10
+
+
+@pytest.mark.parametrize("case", ["candidates", "hot_expansion"])
+def test_guarded_pair_overflow_takes_spark_path(spark, monkeypatch, case):
+    rows, max_doc_freq = _overflow_corpus(case)
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    n_rows, n_candidates, n_expansion = _stream_sizes(df, max_doc_freq)
+    if case == "candidates":
+        assert n_rows < n_candidates
+    else:
+        assert n_candidates <= n_rows < n_expansion
+    for name, build in _guarded_queries(df, max_doc_freq).items():
+        driver, driver_calls = _rows_with_spark_calls(monkeypatch, build)
+        capped, capped_calls = _rows_with_spark_calls(monkeypatch, build, cap=n_rows)
+        assert (driver_calls, capped_calls) == (0, 1), name
+        assert capped == driver and driver, name

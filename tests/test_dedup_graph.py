@@ -114,3 +114,17 @@ def test_min_root_components_matches_reference(seed):
     nodes, roots = dedup_mod._min_root_components(a, b)
     assert nodes.tolist() == sorted(set(a.tolist()) | set(b.tolist()))
     assert roots.tolist() == [find(x) for x in nodes.tolist()]
+
+
+def test_pair_graph_build_job_budget(spark, sf_dir):
+    # job budget: the guarded pair graph of a measured-small corpus is
+    # one bounded shingle read plus its checkpoint (3 jobs measured),
+    # not the 11-job Spark plan
+    from mapreduce_golang_spark.sources.tables import load_table
+
+    docs = load_table(spark, os.path.join(os.path.dirname(sf_dir), "sf0.01"), "documents")
+    pairs, jobs = run_counting_jobs(
+        spark, lambda: dedup_mod.ngram_jaccard_pairs(docs).localCheckpoint(eager=True)
+    )
+    assert jobs <= 3
+    assert pairs.count() > 0
